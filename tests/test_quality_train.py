@@ -180,10 +180,13 @@ def test_perplexity_labels_need_bigram_features(spark, sf_dir):
     median split), so unigram presence sits at chance while ngrams=2
     learns it. Also pins the label balance (quantile split ≈ 50/50)."""
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    spark.catalog.clearCache()  # earlier tests share the session
     lab = qt.perplexity_labels(docs)
     dist = {r["label"]: r["count"] for r in lab.groupBy("label").count().collect()}
     n = sum(dist.values())
     assert abs(dist.get(1.0, 0) / n - 0.5) < 0.1
+    # the scored table is pinned by a checkpoint, not a session-wide cache
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     def train_acc(ngrams):
         w, b = qt.fit_quality_classifier(lab, dim=2048, iters=60, ngrams=ngrams)

@@ -184,6 +184,11 @@ def test_cc_local_finish_gate_boundary_and_markers(spark):
 
 def test_graph_write_and_resume(spark, pages, tmp_path):
     root = str(tmp_path / "kg")
+    # an existing but EMPTY manifest dir reads as "nothing committed yet"
+    os.makedirs(graph.manifest_path(root))
+    assert graph.read_manifest(spark, root, "docs").collect() == []
+    assert graph.pending_parts(spark, root, "docs", 4) == [0, 1, 2, 3]
+    assert graph.complete_stages(spark, root, "do", 4) == []
     docs = extract.run(pages).select("url", "text")
     written = graph.write_stage(docs, root, "docs", key="url", n_buckets=4)
     assert sorted(written) == [0, 1, 2, 3]
@@ -202,6 +207,57 @@ def test_full_pipeline_smoke(spark, pages):
     assert out["triples"].count() > 0
     assert out["linked"].count() > 0
     assert set(out["triples"].columns) == {"subj", "pred", "obj", "url"}
+
+
+def test_main_prints_committed_counts_from_manifests(spark, tmp_path, monkeypatch, capsys):
+    """The production entry (kg_submit → runner.main) computes each stage
+    once: its printed counts are the manifests' committed rows, with no
+    DataFrame.count anywhere in main, and a second call into the same out
+    dir resumes to a no-op that prints the same counts."""
+    import ast
+    import sys
+
+    from x5_ner_spark.pipeline import runner
+
+    root = str(tmp_path / "kg")
+    stages = ["triples", "nodes", "edges"]
+    # same local[4] / 4-partition confs as the session fixture main reuses
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    monkeypatch.setattr(sys, "argv", ["kg_submit.py", "--n", "60", "--out", root, "--buckets", "4"])
+
+    def no_count(self):
+        raise AssertionError("runner.main must not call DataFrame.count")
+
+    def run_main() -> dict:
+        with monkeypatch.context() as m:
+            # the concrete class: Spark 4's classic DataFrame overrides count
+            m.setattr(type(spark.range(0)), "count", no_count)
+            runner.main()
+        printed = [ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("{")]
+        return ast.literal_eval(printed[-1])
+
+    def n_manifest_rows() -> int:
+        return len(spark.read.parquet(graph.manifest_path(root)).collect())
+
+    first = run_main()
+    assert list(first) == stages
+    for stage in stages:
+        m = graph.read_manifest(spark, root, stage)
+        assert m.agg(F.sum("n_rows")).first()[0] == first[stage]
+        assert graph.read_stage(spark, root, stage).count() == first[stage]
+    assert first["triples"] > 0 and first["nodes"] > 0
+    n_rows = n_manifest_rows()
+    assert n_rows == 4 * len(stages)
+
+    # resume: every bucket is already committed, nothing is written again
+    assert run_main() == first
+    assert n_manifest_rows() == n_rows
+
+    # the counts live in the out dir's manifests, so one is required
+    monkeypatch.setattr(sys, "argv", ["kg_submit.py", "--n", "60", "--out", ""])
+    with pytest.raises(SystemExit) as exc:
+        runner.main()
+    assert exc.value.code == 2
 
 
 def test_dedup_docs_keeps_one_canonical_page(spark, pages):

@@ -157,14 +157,16 @@ def perplexity_labels(
     directions)."""
     from . import lm
 
-    # persist the scored table: the percentile scalar and the label join
-    # both consume it, and without the pin the bigram-LM train+score
-    # pipeline runs TWICE end to end (ADVICE r8). The threshold action
-    # below materializes it; the returned frame reads the cached blocks.
-    # Unpersist is the caller's GC: the blocks are dropped with the plan.
+    # pin the scored table: the percentile scalar and the label join both
+    # consume it, and without the pin the bigram-LM train+score pipeline
+    # runs TWICE end to end. The threshold action below materializes the
+    # lazy checkpoint; the returned frame reads its blocks.
+    # Not .persist(): the CacheManager keeps a persisted plan for the whole
+    # session, while checkpoint blocks belong to this DataFrame and are
+    # dropped when it is garbage-collected (same pattern as tfidf_top_terms).
     scored = lm.lm_perplexity(
         docs.select("doc_id", F.col(text_col).alias("text"))
-    ).persist()
+    ).localCheckpoint(eager=False)
     thr = scored.select(
         F.expr(f"percentile(nll, {float(keep_frac)!r})")
     ).first()[0]

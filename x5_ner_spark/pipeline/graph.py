@@ -77,13 +77,33 @@ def manifest_path(root: str) -> str:
     return os.path.join(root, "_manifests")
 
 
-def read_manifest(spark: SparkSession, root: str, stage: str) -> DataFrame:
+def _manifests(spark: SparkSession, root: str) -> DataFrame:
+    """Every manifest row under ``root``; empty before the first commit.
+    The directory is checked up front (write_stage already assumes a local
+    or FUSE-mounted filesystem), so a fresh run never asks Spark to read a
+    missing path."""
     p = manifest_path(root)
-    try:
-        m = spark.read.schema(MANIFEST_SCHEMA).parquet(p)
-    except Exception:
+    if not os.path.isdir(p):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
-    return m.filter(F.col("stage") == stage)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(p)
+
+
+def read_manifest(spark: SparkSession, root: str, stage: str) -> DataFrame:
+    return _manifests(spark, root).filter(F.col("stage") == stage)
+
+
+def committed_rows(spark: SparkSession, root: str, stages: list[str]) -> dict[str, int]:
+    """Rows committed per stage: the manifests' ``n_rows`` summed in one
+    grouped read (0 for a stage with no manifest rows)."""
+    rows = (
+        _manifests(spark, root)
+        .filter(F.col("stage").isin(stages))
+        .groupBy("stage")
+        .agg(F.sum("n_rows").alias("n"))
+        .collect()
+    )
+    got = {r["stage"]: r["n"] for r in rows}
+    return {s: got.get(s, 0) for s in stages}
 
 
 def complete_stages(
@@ -93,13 +113,9 @@ def complete_stages(
     i.e. rounds that committed completely (a crash mid-write leaves fewer
     manifest rows and the round is treated as absent). Used by the iterative
     operators' reliable-checkpoint resume (CC / PageRank)."""
-    p = manifest_path(root)
-    try:
-        m = spark.read.schema(MANIFEST_SCHEMA).parquet(p)
-    except Exception:
-        return []
     rows = (
-        m.filter(F.col("stage").startswith(prefix))
+        _manifests(spark, root)
+        .filter(F.col("stage").startswith(prefix))
         .groupBy("stage")
         .agg(F.countDistinct("part_id").alias("n"))
         .filter(F.col("n") >= n_buckets)

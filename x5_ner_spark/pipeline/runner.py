@@ -5,6 +5,12 @@ which breaks relative imports on module files):
 
     spark-submit --master ... --py-files x5_ner_spark.zip kg_submit.py \
         --pages <parquet> --out <dir> [--buckets K]
+
+Each stage is computed once: the fused pages → triples stage feeds
+candidates, linking, CC and the three committed tables (triples, nodes,
+edges). The run prints ``{"triples": n, "nodes": n, "edges": n}``, the rows
+committed per table, summed from ``<out>/_manifests`` (a resumed run counts
+the buckets an earlier run committed too).
 """
 
 from __future__ import annotations
@@ -14,7 +20,7 @@ import argparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import candidates, canonicalize, extract, graph, linking, mentions, triples
+from . import candidates, canonicalize, extract, fused, graph, linking
 from .fixtures import BRANDS
 
 
@@ -123,15 +129,11 @@ def run_pipeline(
         )
         pages = pages.join(docs.select("url"), "url", "left_semi")
     lex = brand_lexicon if brand_lexicon is not None else [b for b in BRANDS]
-    # `men` is a lazy plan for callers that want the span table; triple
-    # production itself uses the fused single-Arrow-stage path (pipeline/
-    # fused.py — row-identical, one JVM↔Python hop) and is persisted once so
-    # canonicalization's iterative actions and the caller's writes don't
+    # triples come from the fused single-Arrow-stage path (pipeline/fused.py
+    # — row-identical to the staged one, one JVM↔Python hop), persisted once
+    # so canonicalization's iterative actions and the caller's writes don't
     # re-run inference (on a cluster, write_stage's Iceberg tables play this
     # role; in-memory persist covers the library path)
-    men = mentions.run(docs.select("url", "text"), lex, spark, emission_npz=emission_npz)
-    from . import fused
-
     trip = fused.fused_triples(pages, frozenset(lex), emission_npz=emission_npz).persist()
 
     adict = alias_dict if alias_dict is not None else default_alias_dict(spark)
@@ -168,7 +170,7 @@ def run_pipeline(
     ).select("subj", "pred", "obj", "entity_id", "url")
 
     out = {
-        "docs": docs, "mentions": men, "triples": trip, "linked": linked,
+        "docs": docs, "triples": trip, "linked": linked,
         "components": comp, "nodes": ent_nodes, "edges": kg_edges,
     }
     if out_root:
@@ -184,6 +186,10 @@ def run_pipeline(
 
 
 def main() -> None:
+    """CLI entry (what kg_submit.py runs): build the graph into ``--out`` and
+    print the committed row count of each table, read from the stage
+    manifests. The ``--fit-*`` modes train a checkpoint instead and print
+    its fit summary."""
     from ..session import get_spark
     from ..sources.config import load_config
     from .fixtures import pages_df
@@ -273,7 +279,6 @@ def main() -> None:
     pages = spark.read.parquet(pages_path) if pages_path else pages_df(spark, n_pages)
 
     if args.fit_quality:
-        from . import extract
         from ..operators import quality_train as QT
 
         lr = args.train_lr if args.train_lr is not None else 2.0
@@ -299,7 +304,6 @@ def main() -> None:
         return
 
     if args.fit_emission or args.fit_crf:
-        from . import extract
         from ..operators import emission_train as ET
 
         lr = args.train_lr if args.train_lr is not None else 0.8
@@ -324,7 +328,10 @@ def main() -> None:
                    "loss_last": round(hist[-1], 4)})
         return
 
-    out = run_pipeline(
+    if not out_dir:
+        ap.error("--out (or the config's out_dir) is required: the printed "
+                 "counts are read from its stage manifests")
+    run_pipeline(
         spark, pages, out_root=out_dir, brand_lexicon=lex,
         n_buckets=n_buckets, run_id=str(cfg["run_id"]),
         emission_npz=args.emission_npz,
@@ -335,7 +342,7 @@ def main() -> None:
         quality_npz=args.quality_npz,
         quality_min=args.quality_min,
     )
-    print({k: v.count() for k, v in out.items()})
+    print(graph.committed_rows(spark, out_dir, ["triples", "nodes", "edges"]))
 
 
 if __name__ == "__main__":

@@ -31,6 +31,7 @@ from x5_ner_spark.operators import (
     text_stats,
     windows,
 )
+from x5_ner_spark.session import local_frame
 
 # ---------------------------------------------------------------- helpers
 
@@ -63,9 +64,7 @@ def q_kg_mentions_by_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship minimum slice: scan → tokenize → broadcast dictionary join →
     triple emission → aggregate (S-scan, P1, J2, A1)."""
     docs = scan_parallel(_t(spark, sf_dir, "documents"))
-    dic = spark.createDataFrame(
-        sorted(MENTION_DICT.items()), "term string, pred string"
-    )
+    dic = local_frame(spark, sorted(MENTION_DICT.items()), "term string, pred string")
     toks = docs.select(
         "doc_id", F.explode(simple_tokens_col(F.lower("text"))).alias("term")
     )
@@ -124,9 +123,7 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: length-banded Levenshtein join of corpus tokens vs lexicon."""
     docs = scan_parallel(_t(spark, sf_dir, "documents"))
-    lex = spark.createDataFrame(
-        [(t,) for t in sorted(MENTION_DICT)], "lex_term string"
-    )
+    lex = local_frame(spark, [(t,) for t in sorted(MENTION_DICT)], "lex_term string")
     toks = docs.select(
         F.explode(simple_tokens_col(F.lower("text"))).alias("token")
     ).distinct()
@@ -143,7 +140,8 @@ def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_range_join_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7 cross-row variant: interval join of events.value against bins."""
     ev = _t(spark, sf_dir, "events")
-    bins = spark.createDataFrame(
+    bins = local_frame(
+        spark,
         [(0, 0.0, 5.0), (1, 5.0, 10.0), (2, 10.0, 15.0), (3, 15.0, 1e9)],
         "bin_id int, lo double, hi double",
     )

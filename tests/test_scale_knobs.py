@@ -119,7 +119,7 @@ def test_numeric_profile_histogram_matches_percentile_aggregate(spark):
     """r9: exact=True runs the 3-pass histogram-selection path; its output
     must equal the percentile() aggregate form on adversarial shapes
     (single value, duplicates, ties, skew, negative, even/odd counts) and
-    fall back cleanly on null values / null group keys."""
+    fall back cleanly on null values / null group keys / too many groups."""
     import random
 
     from pyspark.sql import functions as F
@@ -134,27 +134,40 @@ def test_numeric_profile_histogram_matches_percentile_aggregate(spark):
         "skew": [1e-9] * 200 + [1e9] * 3,
         "rand": [rnd.uniform(-1e6, 1e6) for _ in range(397)],
     }
+
+    def aggregate(df):
+        return sorted(map(tuple, df.groupBy("g").agg(
+            F.round(F.min("v"), 4).alias("min_price"),
+            F.round(F.max("v"), 4).alias("max_price"),
+            F.expr("percentile(v, array(0.5D, 0.9D))").alias("a"),
+            F.count(F.lit(1)).alias("n_rows"),
+        ).select(
+            "g", "min_price", "max_price",
+            F.round(F.element_at("a", 1), 4).alias("median_price"),
+            F.round(F.element_at("a", 2), 4).alias("p90_price"),
+            "n_rows",
+        ).collect()))
+
     rows = [(g, float(x)) for g, vs in cases.items() for x in vs]
     df = spark.createDataFrame(rows, "g string, v double")
     hist = ts._exact_percentiles_histogram(df, "g", "v", (0.5, 0.9), min_rows=0)
     assert hist is not None
-    agg = df.groupBy("g").agg(
-        F.round(F.min("v"), 4).alias("min_price"),
-        F.round(F.max("v"), 4).alias("max_price"),
-        F.expr("percentile(v, array(0.5D, 0.9D))").alias("a"),
-        F.count(F.lit(1)).alias("n_rows"),
-    ).select(
-        "g", "min_price", "max_price",
-        F.round(F.element_at("a", 1), 4).alias("median_price"),
-        F.round(F.element_at("a", 2), 4).alias("p90_price"),
-        "n_rows",
-    )
-    assert sorted(map(tuple, hist.collect())) == sorted(map(tuple, agg.collect()))
+    assert sorted(map(tuple, hist.collect())) == aggregate(df)
     # null group key → fallback (None), handled by the public operator
     df2 = spark.createDataFrame([(None, 1.0), ("a", 2.0)], "g string, v double")
     assert ts._exact_percentiles_histogram(df2, "g", "v", (0.5, 0.9), min_rows=0) is None
     prof = ts.numeric_profile(df2, "g", "v", exact=True).collect()
     assert len(prof) == 2
+    # pass A collects at most PROFILE_HIST_GROUPS + 1 groups; past the bound
+    # → fallback, and the public operator still equals the aggregate
+    n_groups = ts.PROFILE_HIST_GROUPS + 5
+    df3 = spark.range(n_groups * 7).select(
+        (F.col("id") % n_groups).cast("string").alias("g"),
+        (F.col("id") * 0.5 - 11.0).alias("v"),
+    )
+    assert ts._exact_percentiles_histogram(df3, "g", "v", (0.5, 0.9), min_rows=0) is None
+    prof = sorted(map(tuple, ts.numeric_profile(df3, "g", "v", exact=True).collect()))
+    assert len(prof) == n_groups and prof == aggregate(df3)
 
 
 # ----------------------------------- approx_percentile (numeric profile)

@@ -350,3 +350,92 @@ def test_lsh_valve_default_on():
         inspect.signature(D.minhash_candidate_pairs).parameters["max_bucket"].default
         is None
     )
+
+
+def _lineage(df) -> str:
+    return df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_local_frame_round_trips_types_nulls_and_empty(spark):
+    from x5_ner_spark.session import local_frame
+
+    ddl = "i int, l long, d double, s string"
+    rows = [(1, 2**40, 1.5, "ёж"), (None, None, None, None), (-3, -1, -0.25, "")]
+    df = local_frame(spark, rows, ddl)
+    assert df.schema.simpleString() == "struct<i:int,l:bigint,d:double,s:string>"
+    assert [tuple(r) for r in df.collect()] == rows
+    empty = local_frame(spark, [], ddl)
+    assert empty.schema == df.schema
+    assert empty.collect() == []
+    extra = (1, 2, 3.0, "x", "extra")
+    for bad in ([extra], [(1, 2, 3.0)], rows + [(1,)], rows + [extra]):
+        with pytest.raises(ValueError):
+            local_frame(spark, bad, ddl)
+
+
+def test_local_frame_from_columns_takes_numpy_and_checks_shape(spark):
+    import numpy as np
+    from x5_ner_spark.session import local_frame_from_columns
+
+    ddl = "node long, component long"
+    nodes = np.array([3, 5, 2**40], dtype=np.int64)
+    df = local_frame_from_columns(spark, [nodes, nodes // 2], ddl)
+    assert [tuple(r) for r in df.collect()] == [(3, 1), (5, 2), (2**40, 2**39)]
+    assert "PythonRDD" not in _lineage(df)
+    empty = np.array([], dtype=np.int64)
+    assert local_frame_from_columns(spark, [empty, empty], ddl).collect() == []
+    with pytest.raises(ValueError):  # one column short
+        local_frame_from_columns(spark, [nodes], ddl)
+    with pytest.raises(ValueError):  # columns of unequal length
+        local_frame_from_columns(spark, [nodes, nodes[:2]], ddl)
+
+
+def test_driver_built_tables_run_no_python_workers(spark, tmp_path):
+    """Driver-built tables are JVM-only LocalRelations: no PythonRDD in
+    their lineage, so scanning them starts no Python worker."""
+    from x5_ner_spark.pipeline.runner import default_alias_dict
+    from x5_ner_spark.session import local_frame
+
+    frames = {
+        "local_frame": local_frame(spark, [(1, "a")], "k int, v string"),
+        "default_alias_dict": default_alias_dict(spark),
+        "_manifests": graph._manifests(spark, str(tmp_path / "fresh")),
+    }
+    for name, df in frames.items():
+        assert "PythonRDD" not in _lineage(df), name
+    # the mechanism the helper avoids: a list-built frame does carry one
+    assert "PythonRDD" in _lineage(spark.createDataFrame([(1,)], "k int"))
+
+
+def test_create_dataframe_only_in_allowlisted_functions():
+    """Every driver-built table goes through session's one Arrow-table
+    builder behind local_frame and local_frame_from_columns."""
+    import ast
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.path.join(root, "__spark_entry__.py")]
+    for d, _, fs in os.walk(os.path.join(root, "x5_ner_spark")):
+        paths += [os.path.join(d, f) for f in fs if f.endswith(".py")]
+
+    found = []
+
+    class Calls(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.rel, self.scope = rel, ["<module>"]
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Call(self, node):
+            if isinstance(node.func, ast.Attribute) and node.func.attr == "createDataFrame":
+                found.append((self.rel, self.scope[-1]))
+            self.generic_visit(node)
+
+    for path in paths:
+        with open(path, encoding="utf-8") as fh:
+            Calls(os.path.relpath(path, root)).visit(ast.parse(fh.read()))
+    assert found == [(os.path.join("x5_ner_spark", "session.py"), "_arrow_frame")]

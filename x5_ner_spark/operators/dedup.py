@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.columns import cosine_similarity_col, portable_hash32, simple_tokens_col
 from ..functions.scan import scan_parallel
+from ..session import local_frame
 
 LOCAL_JACCARD_DOCS = int(os.environ.get("X5_JACCARD_LOCAL_DOCS", "500000"))
 """Corpus size (docs) at or below which :func:`jaccard_pairs` runs the
@@ -185,7 +186,7 @@ def _jaccard_pairs_bincount(d: DataFrame, k: int, threshold: float) -> DataFrame
     out_schema = "id_a long, id_b long, n_inter long, na long, nb long"
     pdf = _hashed_shingle_sets(d, k).toPandas()
     n = len(pdf)
-    empty = spark.createDataFrame([], "id_a long, id_b long, jaccard double")
+    empty = local_frame(spark, [], "id_a long, id_b long, jaccard double")
     if n < 2:
         return empty
     order = np.argsort(pdf["doc_id"].to_numpy(), kind="stable")

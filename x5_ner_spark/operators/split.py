@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.columns import portable_hash32
+from ..session import local_frame
 
 ENTITY_TYPES = ("TYPE", "BRAND", "VOLUME", "PERCENT")
 
@@ -60,8 +61,8 @@ def stratified_split(
     labeled = df.withColumn("combo", combo_label_col(spans_col))
     sizes = {r["combo"]: r["n"] for r in labeled.groupBy("combo").agg(F.count(F.lit(1)).alias("n")).collect()}
     quotas = largest_remainder_quotas(sizes, val_size)
-    quota_df = labeled.sparkSession.createDataFrame(
-        [(g, q) for g, q in quotas.items()], "combo string, quota long"
+    quota_df = local_frame(
+        labeled.sparkSession, list(quotas.items()), "combo string, quota long"
     )
     w = Window.partitionBy("combo").orderBy(
         portable_hash32(F.concat(F.col(key_col).cast("string"), F.lit(f"#seed{seed}"))),

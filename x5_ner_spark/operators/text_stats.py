@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions.columns import portable_hash32, simple_tokens_col
 from ..functions.scan import scan_parallel
+from ..session import local_frame
 
 # tiny pinned English stopword list for the n-gram-free language heuristic
 EN_STOPWORDS = [
@@ -373,7 +374,8 @@ def _exact_percentiles_histogram(df, group_col, value_col, pcts,
     combinable aggregate or a pushed-down filter, and nothing proportional
     to group cardinality ever sits on one core).
 
-    Pass A: per-group count/min/max (also the profile's own columns).
+    Pass A: per-group count/min/max (also the profile's own columns),
+    collecting at most PROFILE_HIST_GROUPS + 1 groups.
     Pass B: fixed-width 65536-bucket histogram per group; the driver walks
     the cumulative counts to locate, for each needed 0-based rank
     ``floor/ceil(p·(n-1))``, its bucket and in-bucket offset.
@@ -404,6 +406,8 @@ def _exact_percentiles_histogram(df, group_col, value_col, pcts,
             F.min("v").alias("mn"),
             F.max("v").alias("mx"),
         )
+        # one row past the guard proves it fires; never collect every group
+        .limit(PROFILE_HIST_GROUPS + 1)
         .collect()
     )
     if len(stats) > PROFILE_HIST_GROUPS or any(r["n"] == 0 for r in stats):
@@ -502,7 +506,8 @@ def _exact_percentiles_histogram(df, group_col, value_col, pcts,
                 ps.append(lk if hk == lk else (hi - pos) * lk + (pos - lo) * hk)
         out.append((g, r["mn"], r["mx"], ps[0], ps[1], r["n_rows"]))
     gtype = df.select(F.col(group_col)).schema.fields[0].dataType.simpleString()
-    res = spark.createDataFrame(
+    res = local_frame(
+        spark,
         out,
         f"{group_col} {gtype}, _mn double, _mx double, _med double, "
         f"_p90 double, n_rows long",

@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame_from_columns
+
 LOCAL_FINISH_EDGES = int(os.environ.get("X5_CC_LOCAL_FINISH_EDGES", "2000000"))
 """Frontier size (edges) at or below which :func:`connected_components`
 finishes with a driver-side union-find instead of more star rounds. Each
@@ -111,8 +113,6 @@ def _finish_local(e: DataFrame, rounds: int, resume_info: dict | None) -> DataFr
     if resume_info is not None:
         resume_info["rounds"] = rounds
         resume_info["local_finish_edges"] = int(len(pdf))
-    if not len(pdf):
-        return spark.createDataFrame([], "node long, component long")
     src = pdf["src"].to_numpy(dtype=np.int64)
     dst = pdf["dst"].to_numpy(dtype=np.int64)
     nodes = np.unique(np.concatenate([src, dst]))
@@ -140,12 +140,8 @@ def _finish_local(e: DataFrame, rounds: int, resume_info: dict | None) -> DataFr
             np.minimum(p[a], p[b]), p[b]
         ):
             break
-    comp = nodes[p]
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame({"node": nodes, "component": comp}),
-        "node long, component long",
+    return local_frame_from_columns(
+        spark, [nodes, nodes[p]], "node long, component long"
     )
 
 

@@ -19,6 +19,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 MANIFEST_SCHEMA = (
     "stage string, part_id int, n_rows long, min_key string, max_key string, "
     "wall_s double, run_id string"
@@ -84,7 +86,7 @@ def _manifests(spark: SparkSession, root: str) -> DataFrame:
     missing path."""
     p = manifest_path(root)
     if not os.path.isdir(p):
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return local_frame(spark, [], MANIFEST_SCHEMA)
     return spark.read.schema(MANIFEST_SCHEMA).parquet(p)
 
 
@@ -193,7 +195,7 @@ def write_stage(
     # skewed/converged stage (e.g. a CC frontier hashing into few buckets)
     # would otherwise never register as complete — silently disabling
     # resume for exactly the runs that need it
-    todo_df = spark.createDataFrame([(int(p),) for p in todo], "part_id int")
+    todo_df = local_frame(spark, [(int(p),) for p in todo], "part_id int")
     stats = todo_df.join(stats, "part_id", "left").select(
         "part_id",
         F.coalesce("n_rows", F.lit(0)).cast("long").alias("n_rows"),

@@ -20,6 +20,7 @@ import argparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import get_spark, local_frame
 from . import candidates, canonicalize, extract, fused, graph, linking
 from .fixtures import BRANDS
 
@@ -45,8 +46,8 @@ def default_alias_dict(spark: SparkSession) -> DataFrame:
     for a in ambiguous:
         rows.append((a, eid, "DUP", 0.5))
         eid += 1
-    return spark.createDataFrame(
-        rows, "alias_norm string, entity_id long, entity_kind string, prior double"
+    return local_frame(
+        spark, rows, "alias_norm string, entity_id long, entity_kind string, prior double"
     )
 
 
@@ -190,7 +191,6 @@ def main() -> None:
     print the committed row count of each table, read from the stage
     manifests. The ``--fit-*`` modes train a checkpoint instead and print
     its fit summary."""
-    from ..session import get_spark
     from ..sources.config import load_config
     from .fixtures import pages_df
 

@@ -9,8 +9,9 @@ on). Partition counts are parameterized so the bench harness can compare
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -59,6 +60,46 @@ def get_spark(
     return spark
 
 
+def local_frame(spark: SparkSession, rows: Sequence[tuple], ddl: str) -> DataFrame:
+    """Small driver-side ``rows`` as a DataFrame with the DDL schema ``ddl``.
+
+    The rows travel as one ``pyarrow.Table``, so the plan is a JVM-only
+    ``LocalRelation``. ``createDataFrame(list)`` instead parallelizes
+    pickled rows behind an identity-map PythonRDD, and every job that scans
+    the frame then runs Python-worker tasks. Not built from pandas: with
+    Arrow on, an empty pandas frame falls back to that same PythonRDD path;
+    an Arrow table never does. NULLs (``None``) are kept. A row whose length
+    is not the schema's raises ``ValueError``."""
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(ddl)
+    for r in rows:
+        if len(r) != len(struct):
+            raise ValueError(f"row {r!r} has {len(r)} fields, {ddl!r} has {len(struct)}")
+    return _arrow_frame(spark, list(zip(*rows)) or [()] * len(struct), struct)
+
+
+def local_frame_from_columns(spark: SparkSession, columns: Sequence, ddl: str) -> DataFrame:
+    """:func:`local_frame` from one array per field of ``ddl`` (sequences
+    or numpy arrays; numpy columns are not copied into Python objects)."""
+    from pyspark.sql.types import StructType
+
+    return _arrow_frame(spark, columns, StructType.fromDDL(ddl))
+
+
+def _arrow_frame(spark: SparkSession, columns: Sequence, struct) -> DataFrame:
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(struct)
+    # from_arrays rejects columns of unequal length
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, schema, strict=True)],
+        schema=schema,
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def _warm_icu_case_tables(spark: SparkSession) -> None:
     """One-task warmup of Spark 4's CollationAwareUTF8String static init.
 
@@ -67,13 +108,15 @@ def _warm_icu_case_tables(spark: SparkSession) -> None:
     the class-init monitor and the first Cyrillic-touching job stalls ~70 s.
     Paying it once on a single task at session start removes the stampede;
     on a real cluster the same warmup runs one tiny task per executor
-    (spark.range(numExecutors).repartition(numExecutors))."""
+    (spark.range(numExecutors).repartition(numExecutors)). The input is a
+    ``local_frame``, so the warm-up task runs on the JVM alone and starts
+    no Python worker pool."""
     if getattr(spark, "_x5_icu_warmed", False):
         return
     try:
         from pyspark.sql import functions as F
 
-        spark.createDataFrame([("Ёё",)], "s string").coalesce(1).select(
+        local_frame(spark, [("Ёё",)], "s string").coalesce(1).select(
             F.lower("s"), F.upper("s"), F.initcap("s")
         ).collect()
     except Exception:
